@@ -1,10 +1,10 @@
-"""Storage seam: Iceberg when the runtime is on the classpath, else
-parquet-with-manifest snapshots with the same commit/resume semantics.
+"""Storage seam: parquet-with-manifest snapshots with Iceberg's
+commit/resume semantics.
 
-The 10^12-row deployment writes ``df.writeTo("catalog.db.table").append()``
-into Iceberg (snapshot isolation, partition evolution, audit branch). This
-sandbox has no Iceberg runtime JAR, so the fallback implements the minimal
-contract the pipeline needs on plain parquet:
+Iceberg is the deployment target, not a runtime switch: the 10^12-row
+deployment writes ``df.writeTo("catalog.db.table").append()`` into Iceberg
+(snapshot isolation, partition evolution, audit branch). This catalog
+implements the minimal contract the pipeline needs on plain parquet:
 
 - a *snapshot* is ``<root>/<table>/snapshot=<id>/`` written atomically
   (parquet + `_MANIFEST.json` committed last; a snapshot without a manifest
@@ -15,13 +15,12 @@ contract the pipeline needs on plain parquet:
   writes leaves only an invisible orphan run (re-extracted next time),
   never a half-committed increment (Iceberg analogue: one multi-table
   transaction / WAP commit),
-- ``committed_snapshots`` lists per-table manifests in commit order,
 - ``read_table`` unions the snapshots of committed runs (append semantics);
   ``read_table_latest`` returns only the newest committed run's snapshot
   (replace semantics — for derived aggregates recomputed per run).
 
 Resume-from-checkpoint = anti-join against the union of committed runs'
-keys, identical in both backends.
+keys, as it would be on Iceberg.
 """
 
 from __future__ import annotations
@@ -34,14 +33,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # type: ignore[attr-defined]
-        return True
-    except Exception:
-        return False
-
-
 @dataclass
 class ParquetSnapshotCatalog:
     root: str
@@ -52,9 +43,7 @@ class ParquetSnapshotCatalog:
     def _snap_dir(self, table: str, snapshot_id: str) -> str:
         return os.path.join(self._table_dir(table), f"snapshot={snapshot_id}")
 
-    def write_snapshot(
-        self, df: DataFrame, table: str, snapshot_id: str, extra_meta: dict | None = None
-    ) -> dict:
+    def write_snapshot(self, df: DataFrame, table: str, snapshot_id: str) -> dict:
         path = self._snap_dir(table, snapshot_id)
         df.write.mode("overwrite").parquet(path)
         spark = df.sparkSession
@@ -65,7 +54,6 @@ class ParquetSnapshotCatalog:
             "rows": n_rows,
             "committed_at_epoch": time.time(),
             "schema": df.schema.jsonValue(),
-            **(extra_meta or {}),
         }
         tmp = os.path.join(path, "_MANIFEST.json.tmp")
         final = os.path.join(path, "_MANIFEST.json")
@@ -79,7 +67,7 @@ class ParquetSnapshotCatalog:
     def _runs_dir(self) -> str:
         return os.path.join(self.root, "_runs")
 
-    def commit_run(self, run_id: str, tables: list[str], extra_meta: dict | None = None) -> dict:
+    def commit_run(self, run_id: str, tables: list[str]) -> dict:
         """Atomic run commit point: written only after every table snapshot
         of the run is on disk."""
         os.makedirs(self._runs_dir(), exist_ok=True)
@@ -87,7 +75,6 @@ class ParquetSnapshotCatalog:
             "run_id": run_id,
             "tables": sorted(tables),
             "committed_at_epoch": time.time(),
-            **(extra_meta or {}),
         }
         tmp = os.path.join(self._runs_dir(), f"{run_id}.json.tmp")
         final = os.path.join(self._runs_dir(), f"{run_id}.json")
@@ -104,19 +91,6 @@ class ParquetSnapshotCatalog:
         for name in sorted(os.listdir(rdir)):
             if name.endswith(".json"):
                 with open(os.path.join(rdir, name)) as fh:
-                    out.append(json.load(fh))
-        out.sort(key=lambda m: m["committed_at_epoch"])
-        return out
-
-    def committed_snapshots(self, table: str) -> list[dict]:
-        tdir = self._table_dir(table)
-        if not os.path.isdir(tdir):
-            return []
-        out = []
-        for name in sorted(os.listdir(tdir)):
-            mf = os.path.join(tdir, name, "_MANIFEST.json")
-            if name.startswith("snapshot=") and os.path.isfile(mf):
-                with open(mf) as fh:
                     out.append(json.load(fh))
         out.sort(key=lambda m: m["committed_at_epoch"])
         return out

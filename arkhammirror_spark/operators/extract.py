@@ -11,7 +11,8 @@ No per-row Python crosses the JVM boundary: the plan has exactly one
 PythonMapInArrow node; everything upstream/downstream is native.
 
 The ``_part_id``/``_batch_ms`` side-channel columns feed the per-partition
-audit table and are dropped from the public docs output.
+audit table; they and the fused-NER columns are ``PRIVATE_DOC_COLUMNS``,
+dropped from the public docs output.
 """
 
 from __future__ import annotations
@@ -32,6 +33,10 @@ from ..reference_impl.normalize import assess_quality, detect_language, normaliz
 from ..reference_impl.pdfmini import extract_pdf_text
 from ..reference_impl.textdecode import decode_text_bytes
 from ..schemas import DOCS_MENTIONS_SCHEMA, DOCS_SCHEMA
+
+# columns extract_docs adds beyond the public docs table: the audit side
+# channel, plus the fused-NER columns of include_mentions=True
+PRIVATE_DOC_COLUMNS = ("_part_id", "_batch_ms", "_mentions", "_names", "_n_mentions")
 
 
 def sniff_kind(payload: bytes | None, declared: str | None) -> str:

@@ -1,6 +1,6 @@
 """End-to-end extraction pipeline: pages → docs → spans → entities → edges,
-with explicit partitioning, skew salting, per-partition audit, and
-snapshot-checkpoint resume.
+with explicit partitioning, a per-partition audit table, and run-level
+snapshot commits that resume keys off.
 
 The reference's six event-driven hops (ingest → queue → worker → parse →
 entities → graph; SURVEY.md §3.1) fuse into one declarative DAG; the job
@@ -10,10 +10,12 @@ table.
 
 Scale design (the 100 TB story):
 - input is repartitioned by xxhash64(url) before the extract UDF: uniform
-  work distribution no matter how skewed the host mix is, and a stable
-  partitioning the downstream doc-keyed join can reuse;
-- host-level statistics (used for skew detection itself) run as a salted
-  two-phase aggregation so a 30%-of-corpus mega-host can't hot-spot a reducer;
+  work distribution no matter how skewed the host mix is (this is what
+  evens out a 30%-of-corpus mega-host), and a stable partitioning the
+  downstream doc-keyed join can reuse;
+- ``salted_host_stats``/``detect_heavy_hosts`` are host-statistics helpers
+  (a salted two-phase aggregation, so a mega-host can't hot-spot a
+  reducer); ``run_pipeline`` itself does not call them;
 - column pruning: the UDF sees only (url, warc_ts, html, text, kind); the
   audit pass aggregates the side-channel columns before the public write;
 - resume: the committed docs snapshots' url sets are anti-joined against the
@@ -24,13 +26,14 @@ from __future__ import annotations
 
 import hashlib
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .catalog import ParquetSnapshotCatalog
+from .operators.edges import comention_edges_from_name_sets
 from .operators.entities import aggregate_entities, filter_valid_mentions
-from .operators.extract import extract_docs
+from .operators.extract import PRIVATE_DOC_COLUMNS, extract_docs
 from .operators.spans import (
     extract_chunks,
     extract_claims_df,
@@ -41,35 +44,6 @@ from .schemas import AUDIT_SCHEMA
 
 
 HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/]+)"
-
-# Scratch parquet dirs from no-catalog runs. The snapshot must outlive the
-# lazy DataFrames handed back to the caller, so deletion is deferred to
-# interpreter exit rather than happening eagerly — but without this hook
-# every run_pipeline(out_dir=None) call leaked a full docs copy in /tmp.
-_SCRATCH_DIRS: list[str] = []
-
-
-def _register_scratch_dir(path: str) -> None:
-    import atexit
-    import shutil
-
-    if not _SCRATCH_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
-        )
-    _SCRATCH_DIRS.append(path)
-
-
-def cleanup_scratch_dirs() -> int:
-    """Eagerly delete registered no-catalog scratch snapshots (call once the
-    returned DataFrames are no longer needed). Returns the count removed."""
-    import shutil
-
-    n = len(_SCRATCH_DIRS)
-    for p in _SCRATCH_DIRS:
-        shutil.rmtree(p, ignore_errors=True)
-    _SCRATCH_DIRS.clear()
-    return n
 
 
 def host_col(url):
@@ -107,9 +81,8 @@ def detect_heavy_hosts(pages: DataFrame, threshold_fraction: float = 0.05) -> li
 @dataclass
 class PipelineResult:
     snapshot_id: str
-    tables: dict[str, DataFrame] = field(default_factory=dict)
-    audit: DataFrame | None = None
-    stats: dict = field(default_factory=dict)
+    tables: dict[str, DataFrame]
+    audit: DataFrame
 
 
 def _audit_from_docs(docs_raw: DataFrame, snapshot_id: str) -> DataFrame:
@@ -127,11 +100,15 @@ def _audit_from_docs(docs_raw: DataFrame, snapshot_id: str) -> DataFrame:
     )
 
 
+def _with_committed(prior: DataFrame | None, increment: DataFrame) -> DataFrame:
+    """Committed runs' rows plus this run's increment."""
+    return increment if prior is None else prior.unionByName(increment)
+
+
 def run_extraction_stats(
     spark: SparkSession,
     pages: DataFrame,
     num_partitions: int | None = None,
-    min_edge_count: int = 2,
 ) -> dict:
     """Compute-only extraction run (the scaling-bench unit of work): one
     extract pass, a SLIM persisted frame (scalars + the filtered name arrays
@@ -142,7 +119,6 @@ def run_extraction_stats(
     """
     from pyspark import StorageLevel
 
-    from .operators.edges import comention_edges_from_name_sets
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
@@ -163,20 +139,8 @@ def run_extraction_stats(
         .collect()[0]["n"]
         or 0
     )
-    edges = comention_edges_from_name_sets(
-        slim.where(F.col("error").isNull()), min_count=min_edge_count
-    )
-    n_edges = edges.count()
-    audit_rows = (
-        slim.groupBy("_part_id")
-        .agg(
-            F.count(F.lit(1)).alias("input_rows"),
-            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("output_rows"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_rows"),
-            F.sum("_batch_ms").alias("wall_ms"),
-        )
-        .collect()
-    )
+    n_edges = comention_edges_from_name_sets(slim.where(F.col("error").isNull())).count()
+    audit_rows = _audit_from_docs(slim, snapshot_id="").collect()
     slim.unpersist()
     return {
         "docs": n_docs,
@@ -190,177 +154,115 @@ def run_extraction_stats(
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     num_partitions: int | None = None,
-    resume: bool = True,
-    with_spans: bool = True,
-    min_edge_count: int = 2,
-    snapshot_id: str | None = None,
-    edge_doc_ids: bool = False,
 ) -> PipelineResult:
-    """Run the extraction DAG; when `out_dir` is set, commit snapshots + audit
-    and honor resume-from-checkpoint."""
+    """Run the extraction DAG into the snapshot catalog at `out_dir`: skip
+    urls of committed runs, write this run's table snapshots and audit, then
+    commit the run."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    snapshot_id = snapshot_id or hashlib.sha256(
-        f"{time.time_ns()}".encode()
-    ).hexdigest()[:16]
+    snapshot_id = hashlib.sha256(f"{time.time_ns()}".encode()).hexdigest()[:16]
+    catalog = ParquetSnapshotCatalog(out_dir)
 
-    catalog = ParquetSnapshotCatalog(out_dir) if out_dir else None
-    stats: dict = {}
-
-    if catalog and resume:
-        done = catalog.read_table(spark, "docs")
-        if done is not None:
-            # AQE converts this to a broadcast anti-join when the committed
-            # url set is small; at 10^12 scale it stays a shuffle anti-join
-            # co-partitioned with the url-hash repartition below.
-            pages = pages.join(done.select("url").distinct(), "url", "left_anti")
-
-    pages = partition_pages(pages, num_partitions)
+    done = catalog.read_table(spark, "docs")
+    if done is not None:
+        # AQE converts this to a broadcast anti-join when the committed
+        # url set is small; at 10^12 scale it stays a shuffle anti-join
+        # co-partitioned with the url-hash repartition below.
+        pages = pages.join(done.select("url").distinct(), "url", "left_anti")
 
     # mock-NER is fused into the extract pass (one Arrow trip for the text)
-    docs_raw = extract_docs(pages, include_mentions=with_spans)
-
-    if catalog:
-        # Storage-checkpoint pattern: materialize the extract output ONCE to
-        # parquet, then feed every downstream table from column-pruned reads
-        # of that snapshot. Caching the full frame instead (text + mention
-        # arrays) measurably thrashes executor memory at corpus scale; a
-        # parquet read prunes to exactly the 1-2 columns each consumer needs.
-        catalog.write_snapshot(docs_raw, "docs", snapshot_id)
-        # downstream processes THIS run's increment only (committed earlier
-        # snapshots were fully processed by their own runs)
-        docs_raw = catalog.read_snapshot(spark, "docs", snapshot_id)
-    else:
-        # No catalog: still NEVER persist the full frame — extracted_text +
-        # _mentions in the block cache is the exact invariant-5 violation
-        # (measured 3× slowdown at 600k docs). Use the same
-        # write-then-pruned-read storage checkpoint as the catalog path,
-        # into a synthesized scratch dir (recorded in stats["scratch_dir"];
-        # it must outlive the returned lazy DataFrames).
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix="arkham_docs_scratch_")
-        _register_scratch_dir(scratch)
-        scratch_path = f"{scratch}/docs_{snapshot_id}"
-        docs_raw.write.mode("overwrite").parquet(scratch_path)
-        docs_raw = spark.read.parquet(scratch_path)
-        stats["scratch_dir"] = scratch
-
+    docs_raw = extract_docs(
+        partition_pages(pages, num_partitions), include_mentions=True
+    )
+    # Storage-checkpoint pattern: materialize the extract output ONCE to
+    # parquet, then feed every downstream table from column-pruned reads
+    # of that snapshot. Caching the full frame instead (text + mention
+    # arrays) measurably thrashes executor memory at corpus scale; a
+    # parquet read prunes to exactly the 1-2 columns each consumer needs.
+    catalog.write_snapshot(docs_raw, "docs", snapshot_id)
+    # downstream processes THIS run's increment only (committed earlier
+    # snapshots were fully processed by their own runs)
+    docs_raw = catalog.read_snapshot(spark, "docs", snapshot_id)
     audit = _audit_from_docs(docs_raw, snapshot_id)
-    _PRIVATE = ("_part_id", "_batch_ms", "_mentions", "_names", "_n_mentions")
-    docs = docs_raw.drop(*_PRIVATE)
 
-    tables: dict[str, DataFrame] = {"docs": docs}
-
-    if with_spans:
-        clean = docs_raw.select("url", "extracted_text", "error").where(
-            F.col("error").isNull()
-        )
-        mentions = (
+    clean = docs_raw.select("url", "extracted_text", "error").where(
+        F.col("error").isNull()
+    )
+    span_tables = {
+        "mentions": (
             docs_raw.where(F.col("error").isNull())
             .select("url", F.explode("_mentions").alias("m"))
             .select("url", "m.*")
-        )
-        tables["mentions"] = mentions
-        tables["dates"] = extract_dates(clean)
+        ),
+        "dates": extract_dates(clean),
         # native pair combination over the fused _mentions — the Python
         # re-extraction variant cost half the pipeline wall (see
         # extract_rels_from_mentions)
-        tables["rels"] = extract_rels_from_mentions(docs_raw)
-        tables["chunks"] = extract_chunks(clean)
-        tables["claims"] = extract_claims_df(clean)
-
-    if catalog:
-        # per-document tables append this run's increment. The writes are
-        # INDEPENDENT jobs over the same pruned docs snapshot, so submit
-        # them from worker threads and let Spark's scheduler interleave
-        # their stages — the mentions explode and the regex-heavy
-        # dates/claims scans overlap instead of serializing (each job alone
-        # underutilizes the executors during its narrow final write stage).
-        # Run-level atomicity is untouched: commit_run still happens after
-        # the barrier below.
-        from concurrent.futures import ThreadPoolExecutor
-
-        span_tables = [n for n in tables if n != "docs"]  # docs written above
-        if span_tables:
-            with ThreadPoolExecutor(max_workers=min(4, len(span_tables))) as ex:
-                futures = {
-                    n: ex.submit(catalog.write_snapshot, tables[n], n, snapshot_id)
-                    for n in span_tables
-                }
-                for n, fut in futures.items():
-                    fut.result()  # surface the first failure, keep run orphaned
-
-        if with_spans:
-            # entities/edges are DERIVED AGGREGATES, not append tables: a
-            # per-increment aggregation would split counts across snapshots,
-            # apply min_count per increment (dropping cross-snapshot
-            # co-occurrences) and turn limit into a per-increment top-N.
-            # Recompute them over the FULL committed mentions (prior runs +
-            # this increment) each run; readers take the latest run's result.
-            prior = catalog.read_table(spark, "mentions")
-            inc = catalog.read_snapshot(spark, "mentions", snapshot_id)
-            full_mentions = inc if prior is None else prior.unionByName(inc)
-            valid = filter_valid_mentions(full_mentions)
-            tables["entities"] = aggregate_entities(valid)
-            # document_ids arrays are opt-in: at 10^12-doc scale an unbounded
-            # ARRAY_AGG per edge is a memory hazard; the (doc, entity) mapping
-            # is already materialized in the mentions table.
-            # Edges build from the docs table's fused `_names` arrays (the
-            # sorted distinct valid lowered names the extract pass already
-            # computed): output-identical to comention_edges over the
-            # exploded valid mentions (verified equal on the full bench
-            # corpus) with one narrow explode instead of a mention-row
-            # explode + per-doc re-aggregation — half the shuffles.
-            from .operators.edges import comention_edges_from_name_sets
-
-            prior_docs = catalog.read_table(spark, "docs")
-            inc_docs = catalog.read_snapshot(spark, "docs", snapshot_id)
-            full_docs = (
-                inc_docs if prior_docs is None
-                else prior_docs.unionByName(inc_docs)
+        "rels": extract_rels_from_mentions(docs_raw),
+        "chunks": extract_chunks(clean),
+        "claims": extract_claims_df(clean),
+    }
+    # per-document tables append this run's increment. The writes are
+    # INDEPENDENT jobs over the same pruned docs snapshot, so submit them
+    # from worker threads and let Spark's scheduler interleave their stages
+    # — the mentions explode and the regex-heavy dates/claims scans overlap
+    # instead of serializing (each job alone underutilizes the executors
+    # during its narrow final write stage). Each thread inherits the
+    # caller's job description and group. Run-level atomicity is untouched:
+    # commit_run still happens after the barrier below.
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        futures = [
+            ex.submit(
+                inheritable_thread_target(spark)(catalog.write_snapshot),
+                df, name, snapshot_id,
             )
-            tables["edges"] = comention_edges_from_name_sets(
-                full_docs.where(F.col("error").isNull()),
-                min_count=min_edge_count, include_doc_ids=edge_doc_ids,
-            )
-            catalog.write_snapshot(tables["entities"], "entities", snapshot_id)
-            catalog.write_snapshot(tables["edges"], "edges", snapshot_id)
+            for name, df in span_tables.items()
+        ]
+        for fut in futures:
+            fut.result()  # surface the first failure, keep run orphaned
 
-        catalog.write_snapshot(audit, "audit", snapshot_id)
-        # run-level atomic commit point: ONLY now does this increment become
-        # visible to readers and to resume. A crash anywhere above leaves an
-        # invisible orphan run whose urls are re-extracted next time — no
-        # half-committed increment, no silently lost downstream rows.
-        catalog.commit_run(snapshot_id, [*tables.keys(), "audit"])
-
-        # expose committed data; public docs view prunes the internal columns
-        _DERIVED = ("entities", "edges")
-        tables = {
-            name: (
-                catalog.read_table_latest(spark, name)
-                if name in _DERIVED
-                else catalog.read_table(spark, name)
-            )
-            for name in tables  # type: ignore[misc]
-        }
-        tables["docs"] = tables["docs"].drop(*_PRIVATE)
-    elif with_spans:
-        from .operators.edges import comention_edges_from_name_sets
-
-        valid = filter_valid_mentions(tables["mentions"])
-        tables["entities"] = aggregate_entities(valid)
-        # same `_names` fast path as the catalog arm (docs_raw here is the
-        # pruned scratch-parquet read, so `_names` is a cheap column read)
-        tables["edges"] = comention_edges_from_name_sets(
-            docs_raw.where(F.col("error").isNull()),
-            min_count=min_edge_count, include_doc_ids=edge_doc_ids,
-        )
-
-    return PipelineResult(
-        snapshot_id=snapshot_id, tables=tables, audit=audit, stats=stats
+    # entities/edges are DERIVED AGGREGATES, not append tables: a
+    # per-increment aggregation would split counts across snapshots, apply
+    # min_count per increment (dropping cross-snapshot co-occurrences) and
+    # turn limit into a per-increment top-N. Recompute them over the FULL
+    # committed mentions (prior runs + this increment) each run; readers
+    # take the latest run's result.
+    mentions = _with_committed(
+        catalog.read_table(spark, "mentions"),
+        catalog.read_snapshot(spark, "mentions", snapshot_id),
     )
+    entities = aggregate_entities(filter_valid_mentions(mentions))
+    # Edges build from the docs table's fused `_names` arrays (the sorted
+    # distinct valid lowered names the extract pass already computed):
+    # output-identical to comention_edges over the exploded valid mentions
+    # with one narrow explode instead of a mention-row explode + per-doc
+    # re-aggregation — half the shuffles. No document_ids arrays: at
+    # 10^12-doc scale an unbounded ARRAY_AGG per edge is a memory hazard,
+    # and the (doc, entity) mapping is already in the mentions table.
+    edges = comention_edges_from_name_sets(
+        _with_committed(done, docs_raw).where(F.col("error").isNull())
+    )
+    catalog.write_snapshot(entities, "entities", snapshot_id)
+    catalog.write_snapshot(edges, "edges", snapshot_id)
+    catalog.write_snapshot(audit, "audit", snapshot_id)
+    # run-level atomic commit point: ONLY now does this increment become
+    # visible to readers and to resume. A crash anywhere above leaves an
+    # invisible orphan run whose urls are re-extracted next time — no
+    # half-committed increment, no silently lost downstream rows.
+    appended = ["docs", *span_tables]
+    catalog.commit_run(snapshot_id, [*appended, "entities", "edges", "audit"])
+
+    # expose committed data; public docs view prunes the internal columns
+    tables = {name: catalog.read_table(spark, name) for name in appended}
+    tables["docs"] = tables["docs"].drop(*PRIVATE_DOC_COLUMNS)
+    for name in ("entities", "edges"):
+        tables[name] = catalog.read_table_latest(spark, name)
+    return PipelineResult(snapshot_id=snapshot_id, tables=tables, audit=audit)

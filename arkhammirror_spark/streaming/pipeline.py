@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_docs
+from ..operators.extract import PRIVATE_DOC_COLUMNS, extract_docs
 from ..schemas import PAGES_SCHEMA
 
 
@@ -42,7 +42,7 @@ def stream_extract(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     pages = reader.load(pages_dir)
 
-    docs = extract_docs(pages).drop("_part_id", "_batch_ms")
+    docs = extract_docs(pages).drop(*PRIVATE_DOC_COLUMNS)
     # watermark-ready: warc_ts is the event time; downstream windowed aggs
     # (e.g. docs-per-host-per-hour) can hang off this with late-data bounds
     docs = docs.withWatermark("warc_ts", "1 hour")
@@ -82,6 +82,22 @@ def streaming_host_counts(
     )
 
 
+def _warc_segments(
+    spark: SparkSession, warc_dir: str, max_files_per_trigger: int | None
+):
+    """binaryFile stream of the ``*.warc*`` segments landing in `warc_dir`."""
+    reader = (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, length long, content binary"
+        )
+        .option("pathGlobFilter", "*.warc*")
+    )
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.load(warc_dir)
+
+
 def stream_main_content(
     spark: SparkSession,
     warc_dir: str,
@@ -115,16 +131,7 @@ def stream_main_content(
     from ..sources.warc import warc_to_pages
 
     ensure_shipped(spark)
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    segments = reader.load(warc_dir)
+    segments = _warc_segments(spark, warc_dir, max_files_per_trigger)
     pages = warc_to_pages(segments).where(
         F.col("error").isNull() & F.col("html").isNotNull()
     )
@@ -177,21 +184,12 @@ def stream_warc_extract(
     from ..sources.warc import warc_to_pages
 
     ensure_shipped(spark)
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    segments = reader.load(warc_dir)
+    segments = _warc_segments(spark, warc_dir, max_files_per_trigger)
 
     pages = warc_to_pages(segments).where(F.col("error").isNull()).select(
         "url", "warc_ts", "html", "text"
     )
-    docs = extract_docs(pages).drop("_part_id", "_batch_ms")
+    docs = extract_docs(pages).drop(*PRIVATE_DOC_COLUMNS)
     return (
         docs.writeStream.format("parquet")
         .option("path", out_dir)

@@ -195,51 +195,31 @@ class TestPlanHygiene:
 
 
 class TestExtractionStats:
-    def test_stats_match_full_pipeline(self, spark, pages):
+    def test_stats_match_full_pipeline(self, spark, pages, tmp_path):
         from arkhammirror_spark.pipeline import run_extraction_stats, run_pipeline
 
         stats = run_extraction_stats(spark, pages, num_partitions=8)
-        res = run_pipeline(spark, pages, out_dir=None, num_partitions=8)
+        res = run_pipeline(spark, pages, out_dir=str(tmp_path), num_partitions=8)
         assert stats["docs"] == res.tables["docs"].count() == N_ROWS
         assert stats["errors"] == res.tables["docs"].where("error is not null").count()
         assert stats["mentions"] == res.tables["mentions"].count()
         assert stats["edges"] == res.tables["edges"].count()
 
-    def test_no_catalog_path_never_persists_heavy_frame(self, spark, pages):
-        """CLAUDE.md invariant 5 on EVERY path: the no-catalog pipeline must
-        storage-checkpoint (write-then-pruned-read), not cache a frame that
-        carries extracted_text/_mentions. Verified structurally: downstream
-        tables read from the scratch parquet (FileScan), no InMemoryRelation
-        anywhere in their plans."""
-        import os
-
+    def test_pipeline_never_persists_heavy_frame(self, spark, pages, tmp_path):
+        """CLAUDE.md invariant 5: the pipeline must storage-checkpoint
+        (write-then-pruned-read), not cache a frame that carries
+        extracted_text/_mentions. Verified structurally: no InMemoryRelation
+        anywhere in the plans of the returned tables or the audit."""
         from arkhammirror_spark.pipeline import run_pipeline
 
-        res = run_pipeline(spark, pages, out_dir=None, num_partitions=8)
-        assert "scratch_dir" in res.stats and os.path.isdir(res.stats["scratch_dir"])
-        for name in ("docs", "mentions", "rels", "chunks", "claims", "dates"):
-            plan = res.tables[name]._jdf.queryExecution().optimizedPlan().toString()
+        res = run_pipeline(spark, pages, out_dir=str(tmp_path), num_partitions=8)
+        for name, df in [*res.tables.items(), ("audit", res.audit)]:
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
             assert "InMemoryRelation" not in plan, f"{name} reads a cached frame"
         assert res.tables["docs"].count() > 0
 
-    def test_scratch_dirs_registered_and_cleanable(self, spark, pages):
-        """No-catalog scratch snapshots must not leak /tmp copies forever:
-        each is registered for atexit removal, and cleanup_scratch_dirs()
-        deletes them eagerly once the frames are done with."""
-        import os
-
-        from arkhammirror_spark import pipeline as pl
-
-        res = pl.run_pipeline(spark, pages, out_dir=None, num_partitions=8)
-        scratch = res.stats["scratch_dir"]
-        assert scratch in pl._SCRATCH_DIRS
-        assert res.tables["docs"].count() > 0
-        removed = pl.cleanup_scratch_dirs()
-        assert removed >= 1
-        assert not os.path.exists(scratch)
-        assert pl._SCRATCH_DIRS == []
-
-    def test_name_set_edges_equal_mention_edges(self, spark, pages):
+    @pytest.mark.parametrize("include_doc_ids", [False, True])
+    def test_name_set_edges_equal_mention_edges(self, spark, pages, include_doc_ids):
         from pyspark.sql import functions as F
         from arkhammirror_spark.operators.edges import (
             comention_edges,
@@ -251,9 +231,11 @@ class TestExtractionStats:
         docs_raw = extract_docs(pages, include_mentions=True).where("error is null")
         m = docs_raw.select("url", F.explode("_mentions").alias("mm")).select("url", "mm.*")
         via_mentions = comention_edges(
-            filter_valid_mentions(m), min_count=2, include_doc_ids=False
+            filter_valid_mentions(m), min_count=2, include_doc_ids=include_doc_ids
         ).collect()
-        via_names = comention_edges_from_name_sets(docs_raw, min_count=2).collect()
+        via_names = comention_edges_from_name_sets(
+            docs_raw, min_count=2, include_doc_ids=include_doc_ids
+        ).collect()
         assert sorted(map(tuple, via_mentions)) == sorted(map(tuple, via_names))
 
 
@@ -298,6 +280,25 @@ class TestRunLevelCommit:
             inc_rows = sorted(map(tuple, res_inc.tables[table].collect()))
             full_rows = sorted(map(tuple, res_full.tables[table].collect()))
             assert inc_rows == full_rows, table
+
+
+class TestJobLabels:
+    def test_span_table_writer_jobs_inherit_job_group(self, spark, tmp_path):
+        """The span-table writes run on worker threads; their jobs must carry
+        the caller's job group and description like every other job."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("pipeline-labels", "pipeline run")
+        try:
+            run_pipeline(spark, gen_pages_df(spark, 60, seed=7),
+                         out_dir=str(tmp_path), num_partitions=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        unlabeled = set(tracker.getJobIdsForGroup(None)) - before
+        assert tracker.getJobIdsForGroup("pipeline-labels")
+        assert unlabeled == set()
 
 
 class TestNativeRels:
