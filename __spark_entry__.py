@@ -11,7 +11,7 @@ queries()     — the consolidated 50-entry operator contract
                 related queries merge as null-padded part-tagged unions
                 (or a doc_id join for the doc-profile family), each part
                 still value-identical to its own DuckDB oracle. The
-                part-level registry remains in arkhammirror_spark.queries.
+                part-level registry is arkhammirror_spark.contract.QUERIES.
 oracle_sql()  — exact DuckDB equivalents, merged the same way (rehearsed
                 value-identical in tests/test_queries_oracle.py).
 """
@@ -22,8 +22,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from arkhammirror_spark.contract import build_contract
-from arkhammirror_spark.queries import QUERIES
+from arkhammirror_spark.contract import QUERIES, build_contract
 
 _CONTRACT, _ORACLES = build_contract()
 

@@ -8,8 +8,12 @@ Mechanics: related part-queries merge into one entry as a null-padded
 UNION with a `part` tag (or a doc_id JOIN for the doc-profile family);
 the DuckDB oracle merges the SAME way from the part oracles, so each
 merged entry remains value-identical per part — nothing is weakened,
-only packed. The part-level registry (`queries.QUERIES`) stays intact
-for finer-grained use; `__spark_entry__` serves this contract.
+only packed. `__spark_entry__` serves this contract.
+
+The part-level registry lives here too: `QUERIES` / `ORACLE_SQL` merge
+queries → queries_ext → queries_ext2 → queries_ext3 in that order, once,
+after all four modules are fully imported, so the registry does not depend
+on which module a caller imports first.
 """
 
 from __future__ import annotations
@@ -18,7 +22,17 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import ORACLE_SQL, QUERIES
+from .queries import ORACLE_BASE, QUERIES_BASE
+from .queries_ext import ORACLE_EXT, QUERIES_EXT
+from .queries_ext2 import ORACLE_EXT2, QUERIES_EXT2
+from .queries_ext3 import ORACLE_EXT3, QUERIES_EXT3
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    **QUERIES_BASE, **QUERIES_EXT, **QUERIES_EXT2, **QUERIES_EXT3
+}
+ORACLE_SQL: dict[str, str] = {
+    **ORACLE_BASE, **ORACLE_EXT, **ORACLE_EXT2, **ORACLE_EXT3
+}
 
 # (spark_type, duck_type) aliases
 _B = ("bigint", "BIGINT")

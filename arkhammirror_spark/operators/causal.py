@@ -35,6 +35,8 @@ from collections import deque
 
 from pyspark.sql import DataFrame, functions as F
 
+from .graph import bounded_collect
+
 DEFAULT_CAUSAL_EDGE_TYPES = [
     "causes", "influences", "leads_to", "results_in",
     "precedes", "triggers", "enables",
@@ -313,50 +315,45 @@ def causal_ordering_distributed(
         ).distinct()
     ).localCheckpoint(eager=True)
 
-    # Adaptive small-graph fast path (the CC/LPA cap pattern): the layer
-    # of a node — the synchronous round at which its in-degree reaches
-    # zero — is a unique function of the graph, so a driver Kahn over a
-    # bounded edge set is EXACTLY the distributed loop's labeling
-    # (including the all-remaining = -1 cycle rule). Bounded probes read
-    # the checkpoints, so nothing upstream recomputes.
-    driver_cap = 100_000
-    e_head = e.limit(driver_cap + 1).collect()
-    if len(e_head) <= driver_cap:
-        n_head = all_nodes.limit(driver_cap + 1).collect()
-        if len(n_head) <= driver_cap:
-            node_set = {r["n"] for r in n_head}
-            succ: dict[str, list[str]] = {}
-            indeg = {n: 0 for n in node_set}
-            for r in e_head:
-                succ.setdefault(r["c"], []).append(r["x"])
-                if r["x"] in indeg:
-                    indeg[r["x"]] += 1
-            layers_d: dict[str, int] = {}
-            frontier = sorted(n for n in node_set if indeg[n] == 0)
-            lvl = 0
-            remaining = set(node_set)
-            while frontier and lvl < max_rounds:
-                nxt: list[str] = []
-                for n in frontier:
-                    layers_d[n] = lvl
-                    remaining.discard(n)
-                    for m in succ.get(n, []):
-                        if m in remaining:
-                            indeg[m] -= 1
-                            if indeg[m] == 0:
-                                nxt.append(m)
-                frontier = sorted(set(nxt))
-                lvl += 1
-            if not frontier:
-                # loop ended with no zero-in-degree node left: everything
-                # remaining is on/downstream of a cycle (-1, like the
-                # distributed arm). A max_rounds exhaustion instead leaves
-                # the rest unlabeled, also like the distributed arm.
-                for n in remaining:
-                    layers_d[n] = -1
-            return edges.sparkSession.createDataFrame(
-                sorted(layers_d.items()), "node string, layer long"
-            )
+    # Driver lane: the layer of a node — the synchronous round at which its
+    # in-degree reaches zero — is a unique function of the graph, so a
+    # driver Kahn is exactly the distributed loop's labeling, round budget
+    # and -1 cycle rule included. Both probes read the checkpoints above.
+    e_head = bounded_collect(e)
+    n_head = bounded_collect(all_nodes) if e_head is not None else None
+    if n_head is not None:
+        node_set = {r["n"] for r in n_head}
+        succ: dict[str, list[str]] = {}
+        indeg = {n: 0 for n in node_set}
+        for r in e_head:
+            succ.setdefault(r["c"], []).append(r["x"])
+            if r["x"] in indeg:
+                indeg[r["x"]] += 1
+        layers_d: dict[str, int] = {}
+        frontier = sorted(n for n in node_set if indeg[n] == 0)
+        lvl = 0
+        remaining = set(node_set)
+        while frontier and lvl < max_rounds:
+            nxt: list[str] = []
+            for n in frontier:
+                layers_d[n] = lvl
+                remaining.discard(n)
+                for m in succ.get(n, []):
+                    if m in remaining:
+                        indeg[m] -= 1
+                        if indeg[m] == 0:
+                            nxt.append(m)
+            frontier = sorted(set(nxt))
+            lvl += 1
+        if not frontier and lvl < max_rounds:
+            # the distributed loop spends one more round finding no
+            # zero-in-degree node, then labels the rest (on or downstream
+            # of a cycle) -1; with the budget spent it leaves them out
+            for n in remaining:
+                layers_d[n] = -1
+        return edges.sparkSession.createDataFrame(
+            sorted(layers_d.items()), "node string, layer long"
+        )
 
     remaining_nodes = all_nodes
     remaining_edges = e

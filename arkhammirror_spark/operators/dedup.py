@@ -833,7 +833,7 @@ def duplicate_groups(
     ).localCheckpoint(eager=True)
     # near-dup pair frames are FAR smaller than the corpus (output-bound
     # banded join), so materializing them once keeps the component loop —
-    # whose fast path probes the edge count and whose distributed loop
+    # whose bounded_collect probe reads the edges and whose distributed loop
     # reads the frame every round — from re-running the banded join
     comp = connected_components_distributed(edges)
     return (

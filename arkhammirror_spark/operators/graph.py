@@ -8,13 +8,34 @@ computation over the collected edge list is proportionate; for
 beyond-memory graphs, `connected_components_distributed` provides the
 iterative min-label-propagation (hash-join per round, AQE-planned) that
 scales with the cluster.
+
+The driver lane and the distributed lane of the iterative operators here,
+in causal.py and in graph_scoring.py are chosen by one probe,
+`bounded_collect`, against one cap, `DRIVER_CAP`.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict, deque
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Row, functions as F
+
+# Inputs with at most this many rows take the driver lane; larger ones take
+# the distributed loop. Read at call time, so tests force the distributed
+# lane with monkeypatch.setattr(graph, "DRIVER_CAP", 0).
+DRIVER_CAP = 100_000
+
+
+def bounded_collect(df: DataFrame) -> list[Row] | None:
+    """All rows of `df` if there are at most DRIVER_CAP of them, else None.
+
+    One job both decides and fetches: when `limit(DRIVER_CAP + 1)` does not
+    exceed the cap, those rows ARE the whole frame. limit() runs
+    incrementally (1, 4, 16 … partitions per attempt), so pass a
+    checkpointed or otherwise cheap frame, or each attempt recomputes its
+    upstream."""
+    rows = df.limit(DRIVER_CAP + 1).collect()
+    return rows if len(rows) <= DRIVER_CAP else None
 
 
 # ----------------------------- driver-side (≤ reference caps) --------------
@@ -413,17 +434,12 @@ def label_propagation_communities(
         .agg(F.sum("w").alias("w"))
     )
 
-    # Adaptive small-graph fast path (same shape as
-    # connected_components_distributed's): bounded graphs pay only fixed
-    # per-round scheduling in the distributed loop, so emulate the EXACT
-    # synchronous min-tie weighted LPA on the driver. The update rule is
-    # deterministic under any partitioning, and for integer-valued weights
-    # (including the unweighted w=1 contract path) the per-label sums are
-    # exact in float regardless of addition order, so labels are identical
-    # to the distributed loop's.
-    driver_cap = 100_000
-    head = sym.limit(driver_cap + 1).collect()
-    if len(head) <= driver_cap:
+    # Driver lane: the update rule is deterministic under any partitioning,
+    # and for integer-valued weights (including the unweighted w=1 contract
+    # path) the per-label sums are exact in float regardless of addition
+    # order, so labels are identical to the distributed loop's.
+    head = bounded_collect(sym)
+    if head is not None:
         adj: dict[str, dict[str, float]] = {}
         for r in head:
             adj.setdefault(r["src"], {})[r["dst"]] = r["w"]
@@ -496,78 +512,66 @@ def label_propagation_communities(
 
 
 def connected_components_distributed(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    require_convergence: bool = True,
-    driver_cap: int | None = 100_000,
+    edges: DataFrame, max_iterations: int = 50
 ) -> DataFrame:
     """Min-label propagation over (node, component) frames.
 
     Each round: component := min(component over neighbors ∪ self); converges
     in O(diameter) rounds. The loop runs UNTIL the changed-count reaches 0 —
     max_iterations is a safety cap, and exhausting it without convergence
-    raises (require_convergence=True, default) rather than silently
-    returning partially-propagated labels: a long-chain component deeper
-    than the cap would otherwise produce wrong components that no downstream
-    check can see. Pure DataFrame joins → scales with the cluster
-    (what the reference cannot do beyond one process's memory).
+    raises rather than returning partially-propagated labels: a long-chain
+    component deeper than the cap would otherwise produce wrong components
+    that no downstream check can see. Pure DataFrame joins → scales with the
+    cluster (what the reference cannot do beyond one process's memory).
     Returns (name, component) where component is the lexicographic min name
     reachable.
 
-    Adaptive small-graph fast path (the broadcast-join-threshold idea):
-    when the DISTINCT edge set fits under `driver_cap`, min-label rounds
-    pay only fixed per-stage scheduling cost — ~0.6 s/round × O(log d)
-    rounds for a 2k-edge graph — so the components are computed by driver
-    union-find instead. `limit(cap+1).collect()` both decides and fetches
-    in ONE job: if the cap is not exceeded those rows ARE the whole graph.
-    Labels are identical (min member per component, same string ordering);
-    graphs above the cap take the distributed loop unchanged. Set
-    driver_cap=None to force the distributed path.
+    Driver lane: when the DISTINCT edge set fits `bounded_collect`, min-label
+    rounds would pay only fixed per-stage scheduling cost — ~0.6 s/round ×
+    O(log d) rounds for a 2k-edge graph — so driver union-find computes the
+    components instead.
     """
-    if driver_cap is not None:
-        # self-loop rows (a == b) are kept: they seed their node into
-        # parent{} as its own component, matching the distributed path
-        # (where min over neighbors ∪ self keeps such nodes) — filtering
-        # them out would make the output depend on which path ran
-        # slim (a, b) checkpoint BEFORE the cap probe: limit().collect()
-        # executes incrementally (1, 4, 16 … partitions per attempt) and
-        # each attempt would otherwise recompute the whole upstream
-        # (NER + comention) lineage — measured ~1.7× the full input cost.
-        # Two string columns per distinct edge, invariant-5-slim.
-        dedup_edges = edges.select(
+    # Slim (a, b) checkpoint before the probe, so its incremental limit()
+    # attempts do not recompute the upstream (NER + comention) lineage.
+    # Self-loop rows (a == b) are kept: they seed their node as its own
+    # component, as min over neighbors ∪ self does in the distributed loop.
+    head = bounded_collect(
+        edges.select(
             F.least("entity_a", "entity_b").alias("a"),
             F.greatest("entity_a", "entity_b").alias("b"),
         ).distinct().localCheckpoint(eager=True)
-        head = dedup_edges.limit(driver_cap + 1).collect()
-        if len(head) <= driver_cap:
-            parent: dict[str, str] = {}
+    )
+    if head is not None:
+        parent: dict[str, str] = {}
 
-            def find(x: str) -> str:
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x: str) -> str:
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
 
-            for row in head:
-                a, b = row["a"], row["b"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                if a == b:
-                    continue
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[ra] = rb
-            comp_min: dict[str, str] = {}
-            for n in parent:
-                r = find(n)
-                if r not in comp_min or n < comp_min[r]:
-                    comp_min[r] = n
-            out = [(n, comp_min[find(n)]) for n in parent]
-            return edges.sparkSession.createDataFrame(
-                out, "name string, component string"
-            )
+        for row in head:
+            a, b = row["a"], row["b"]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            if a == b:
+                continue
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[ra] = rb
+        # min member per component: the label, in the same string order,
+        # that the distributed min-label fixpoint reaches
+        comp_min: dict[str, str] = {}
+        for n in parent:
+            r = find(n)
+            if r not in comp_min or n < comp_min[r]:
+                comp_min[r] = n
+        out = [(n, comp_min[find(n)]) for n in parent]
+        return edges.sparkSession.createDataFrame(
+            out, "name string, component string"
+        )
 
     sym = (
         edges.select(F.col("entity_a").alias("src"), F.col("entity_b").alias("dst"))
@@ -648,11 +652,11 @@ def connected_components_distributed(
             converged = True
             break
     sym.unpersist()
-    if not converged and require_convergence:
+    if not converged:
         raise RuntimeError(
             f"connected_components_distributed did not converge within "
             f"{max_iterations} iterations (graph diameter exceeds the cap); "
-            f"raise max_iterations or pass require_convergence=False"
+            f"raise max_iterations"
         )
     return labels
 

@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .graph import bounded_collect
+
 
 @dataclass
 class CompositeConfig:
@@ -487,16 +489,13 @@ def composite_entity_scores(
         )
     )
     # Global rank over ALL scored entities without an unpartitioned
-    # row_number window (single-partition WindowExec at scale). The scored
-    # frame is materialized once (slim scalar columns); bounded entity
-    # sets (≤ cap) rank on the driver over collected (entity_id, score)
-    # keys — identical total order (doubles, unique entity_id tiebreak) —
-    # re-attached as a broadcast map. Larger sets take the distributed
-    # form: range-partition by the rank key (boundaries pinned by a second
+    # row_number window (single-partition WindowExec at scale). The driver
+    # lane sorts the collected (entity_id, score) keys; the distributed
+    # lane range-partitions by the rank key (boundaries pinned by a second
     # checkpoint so the per-partition counts and the final plan see the
-    # SAME assignment), rank = rows-in-earlier-partitions + keyed
-    # row_number. Keys are unique, so both forms equal the original
-    # row_number exactly.
+    # SAME assignment) and ranks as rows-in-earlier-partitions + keyed
+    # row_number. Keys are unique (entity_id tiebreak), so both lanes equal
+    # the original row_number exactly.
     spark = out.sparkSession
     out_cols = [
         "node_id", "entity_id", "label", "entity_type",
@@ -506,9 +505,8 @@ def composite_entity_scores(
     ]
     order = [F.desc("composite_score"), F.asc("entity_id")]
     base = out.localCheckpoint(eager=True)
-    n_scored = base.count()
-    if n_scored <= 100_000:
-        keys = base.select("entity_id", "composite_score").collect()
+    keys = bounded_collect(base.select("entity_id", "composite_score"))
+    if keys is not None:
         keys.sort(key=lambda r: (-r["composite_score"], r["entity_id"]))
         rank_df = spark.createDataFrame(
             [(r["entity_id"], i + 1) for i, r in enumerate(keys)],

@@ -496,7 +496,9 @@ def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registry + oracle SQL
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+# This module's own entries. The full part registry, merged with the
+# queries_ext* modules, is contract.QUERIES / contract.ORACLE_SQL.
+QUERIES_BASE: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "mentions": q_mentions,
     "entities": q_entities,
     "comention_edges": q_comention_edges,
@@ -515,7 +517,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_knn": q_embedding_knn,
 }
 
-ORACLE_SQL: dict[str, str] = {
+ORACLE_BASE: dict[str, str] = {
     "mentions": _MENTIONS_CTE + "SELECT doc_id, entity_text FROM mentions",
     "entities": _MENTIONS_CTE
     + f"""
@@ -722,21 +724,3 @@ FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10
 """,
 }
 
-
-# merge the extended registry (search / near-dup / simhash / anomalies /
-# timeline / relations); import at module bottom so queries_ext can import
-# the shared helpers above without a circular-init problem
-from .queries_ext import ORACLE_EXT, QUERIES_EXT  # noqa: E402
-
-QUERIES.update(QUERIES_EXT)
-ORACLE_SQL.update(ORACLE_EXT)
-
-from .queries_ext2 import ORACLE_EXT2, QUERIES_EXT2  # noqa: E402
-
-QUERIES.update(QUERIES_EXT2)
-ORACLE_SQL.update(ORACLE_EXT2)
-
-from .queries_ext3 import ORACLE_EXT3, QUERIES_EXT3  # noqa: E402
-
-QUERIES.update(QUERIES_EXT3)
-ORACLE_SQL.update(ORACLE_EXT3)

@@ -28,7 +28,7 @@ from pyspark.sql.types import (
 from .operators.dedup import ngram_jaccard_pairs, verified_neardup_pairs
 from .operators.spread import spread as _spread
 from .operators.timeline import extract_timeline_events
-from .queries import _cased_spark, _cased_sql, _load
+from .queries import ORACLE_BASE, _MENTIONS_CTE, _cased_spark, _cased_sql, _load
 from .reference_impl.ner import mock_ner
 
 BM25_TERMS = ["customer", "spark", "window"]
@@ -664,8 +664,6 @@ FROM documents
 }
 
 # relations oracle: mentions islands + ordered pair join, conf 0.5
-from .queries import _MENTIONS_CTE  # noqa: E402
-
 ORACLE_EXT["relations_cooccur"] = (
     _MENTIONS_CTE.replace(
         "SELECT r.doc_id, string_agg(r.w, ' ' ORDER BY r.pos) AS entity_text",
@@ -793,10 +791,8 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES_EXT["edge_degrees"] = q_edge_degrees
 QUERIES_EXT["hybrid_search"] = q_hybrid_search
 
-from .queries import ORACLE_SQL as _BASE_ORACLES  # noqa: E402
-
 ORACLE_EXT["edge_degrees"] = f"""
-WITH edges AS ({_BASE_ORACLES["comention_edges"]})
+WITH edges AS ({ORACLE_BASE["comention_edges"]})
 SELECT entity_name, count(*)::BIGINT AS degree FROM (
   SELECT entity_a AS entity_name FROM edges
   UNION ALL

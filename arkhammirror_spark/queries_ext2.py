@@ -835,7 +835,7 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
+    from .queries import ORACLE_BASE as _BASE
 
     return f"""
 WITH RECURSIVE edges AS ({_BASE["comention_edges"]}),
@@ -886,7 +886,7 @@ def _pr_oracle() -> str:
     at the last ulp — CLAUDE.md invariant 2). The (1.0-0.85) and 0.85
     factors are written as the same IEEE double expressions Spark folds
     (1.0-0.85 != 0.15 in binary)."""
-    from .queries import ORACLE_SQL as _BASE
+    from .queries import ORACLE_BASE as _BASE
 
     # rank expression for iteration t, given integer incoming sum c.inc
     rank_expr = (
@@ -1226,7 +1226,7 @@ def q_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_stats_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
+    from .queries import ORACLE_BASE as _BASE
 
     return f"""
 WITH edges AS ({_BASE["comention_edges"]}),
@@ -1275,7 +1275,7 @@ def q_graph_ego(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ego_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
+    from .queries import ORACLE_BASE as _BASE
 
     return f"""
 WITH edges AS ({_BASE["comention_edges"]}),

@@ -3818,7 +3818,7 @@ def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_flows_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
+    from .queries import ORACLE_BASE as _BASE
 
     comention = _BASE["comention_edges"]
     # mirror the doc_id % 3 bound of _flows_comention (the comention SQL

@@ -63,7 +63,7 @@ def main() -> None:
         "arkhammirror-bench", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
 
-    from arkhammirror_spark.queries import QUERIES
+    from arkhammirror_spark.contract import QUERIES
     from arkhammirror_spark.datagen import gen_pages_df
     from arkhammirror_spark.pipeline import run_pipeline
 

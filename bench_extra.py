@@ -7,7 +7,7 @@ Usage:
   python bench_extra.py both  <part> [part ...]
   python bench_extra.py entry <entry> [...]       # contract-entry level
 
-Parts come from arkhammirror_spark.queries.QUERIES (the fine-grained
+Parts come from arkhammirror_spark.contract.QUERIES (the fine-grained
 registry bench.py itself sums into contract entries); entries come from
 the 50-entry driver contract. Timing uses the noop sink (guide §1.4) so
 the computation — not the count() shortcut or a real sink — is what is
@@ -44,7 +44,7 @@ def main() -> None:
 
         registry, _ = build_contract()
     else:
-        from arkhammirror_spark.queries import QUERIES as registry
+        from arkhammirror_spark.contract import QUERIES as registry
 
     if names == ["all"]:
         names = list(registry.keys())

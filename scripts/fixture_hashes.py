@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from arkhammirror_spark.queries import QUERIES
+    from arkhammirror_spark.contract import QUERIES
     from arkhammirror_spark.session import get_spark
 
     spark = get_spark(

@@ -7,17 +7,20 @@ cell raises `unhashable type: 'list'` — measured on canonical_urls in
 round 4)."""
 
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import types as T
 
 from arkhammirror_spark.contract import (
     MERGES,
+    ORACLE_SQL,
     PROFILE_JOIN,
+    QUERIES,
     _SENTINEL,
     build_contract,
 )
-from arkhammirror_spark.queries import ORACLE_SQL, QUERIES
 
 
 def test_contract_fits_the_50_entry_gate():
@@ -48,6 +51,34 @@ def test_every_part_query_is_served_exactly_once():
     # every absorbed part exists in the part registry with an oracle
     for src in absorbed:
         assert src in QUERIES and src in ORACLE_SQL, src
+
+
+_REGISTRY_PROBE = """
+import hashlib
+import arkhammirror_spark.{first}
+from arkhammirror_spark.contract import ORACLE_SQL, QUERIES, build_contract
+names = list(QUERIES)
+print(len(names),
+      hashlib.sha256('|'.join(names).encode()).hexdigest()[:12],
+      hashlib.sha256(repr(sorted(ORACLE_SQL.items())).encode()).hexdigest()[:12],
+      len(build_contract()[0]))
+"""
+
+
+@pytest.mark.parametrize(
+    "first", ["queries_ext", "queries_ext2", "queries_ext3", "contract"]
+)
+def test_registry_does_not_depend_on_import_order(first):
+    """A fresh interpreter that imports any query module first still gets
+    the full part registry: 108 names in the same order, the same oracle
+    texts, and the 50-entry contract."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _REGISTRY_PROBE.format(first=first)],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["108", "777a8d180e11", "b766336f4088", "50"]
 
 
 def test_merge_specs_reference_real_columns():

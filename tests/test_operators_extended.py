@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from arkhammirror_spark.operators import graph
 from arkhammirror_spark.operators.coref import resolve_coref
 from arkhammirror_spark.operators.graph import (
     connected_components,
@@ -26,6 +27,15 @@ from arkhammirror_spark.operators.timeline import (
 )
 from arkhammirror_spark.reference_impl.coreference import resolve_coreferences
 from arkhammirror_spark.reference_impl.ner import mock_ner
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def lane(request, monkeypatch):
+    """Run a graph-operator test on each lane. Test graphs sit under the
+    driver cap; cap 0 sends them down the distributed loop instead."""
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "DRIVER_CAP", 0)
+    return request.param
 
 
 class TestTimeline:
@@ -107,7 +117,8 @@ class TestGraph:
         assert comp["a"] == comp["b"] == comp["c"]
         assert comp["x"] == comp["y"] != comp["a"]
 
-    def test_components_distributed_matches(self, spark, edges):
+    def test_components_distributed_matches(self, spark, edges, monkeypatch):
+        monkeypatch.setattr(graph, "DRIVER_CAP", 0)
         dist = {
             r["name"]: r["component"]
             for r in connected_components_distributed(edges).collect()
@@ -119,11 +130,10 @@ class TestGraph:
         assert shortest_path(edges, "a", "c") in (["a", "c"],)
         assert shortest_path(edges, "a", "y") is None
 
-    def test_components_driver_fastpath_matches_distributed(self, spark):
-        """The small-graph union-find fast path and the distributed
-        min-label loop must produce identical (name, component) labels on
-        a chain-heavy random graph (chains exercise the pointer-doubling
-        shortcut; driver_cap below the edge count forces the loop)."""
+    def test_components_driver_fastpath_matches_distributed(self, spark, lane):
+        """Both lanes must label every node with the min member of its
+        union-find group on a chain-heavy random graph (chains exercise
+        the distributed loop's pointer-doubling shortcut)."""
         import random
 
         rng = random.Random(11)
@@ -139,46 +149,29 @@ class TestGraph:
         edges = spark.createDataFrame(
             rows, "entity_a: string, entity_b: string"
         )
-        fast = {
+        groups: dict[int, list[str]] = {}
+        for n, c in connected_components(edges).items():
+            groups.setdefault(c, []).append(n)
+        expected = {n: min(g) for g in groups.values() for n in g}
+        got = {
             r["name"]: r["component"]
             for r in connected_components_distributed(edges).collect()
         }
-        dist = {
-            r["name"]: r["component"]
-            for r in connected_components_distributed(
-                edges, driver_cap=None
-            ).collect()
-        }
-        assert fast == dist
-        forced = {
-            r["name"]: r["component"]
-            for r in connected_components_distributed(
-                edges, driver_cap=10
-            ).collect()
-        }
-        assert forced == dist
+        assert got == expected
 
-    def test_components_self_loop_only_node_both_paths(self, spark):
+    def test_components_self_loop_only_node_both_paths(self, spark, lane):
         """Regression: a node appearing ONLY in a self-loop edge must get
-        its own component on BOTH the driver union-find fast path and the
-        distributed min-label path — output must not depend on which ran."""
+        its own component on BOTH the driver union-find lane and the
+        distributed min-label lane — output must not depend on which ran."""
         edges = spark.createDataFrame(
             [("a", "b"), ("solo", "solo"), ("b", "a")],
             "entity_a: string, entity_b: string",
         )
-        fast = {
+        got = {
             r["name"]: r["component"]
             for r in connected_components_distributed(edges).collect()
         }
-        dist = {
-            r["name"]: r["component"]
-            for r in connected_components_distributed(
-                edges, driver_cap=None
-            ).collect()
-        }
-        assert fast == dist
-        assert fast["solo"] == "solo"
-        assert fast["a"] == fast["b"] == "a"
+        assert got == {"a": "a", "b": "a", "solo": "solo"}
 
     def test_betweenness_distributed_matches_driver_side(self, spark):
         """Source-parallel betweenness must give the exact per-node scores
@@ -212,7 +205,7 @@ class TestGraph:
         for node, score in driver.items():
             assert abs(dist.get(node, 0.0) - score) < 1e-9, node
 
-    def test_label_propagation_separates_cliques(self, spark):
+    def test_label_propagation_separates_cliques(self, spark, lane):
         """Two 4-cliques joined by one bridge edge must resolve into two
         communities matching the cliques, deterministically."""
         from arkhammirror_spark.operators.graph import (
@@ -239,7 +232,7 @@ class TestGraph:
                  for r in label_propagation_communities(edges).collect()}
         assert again == got
 
-    def test_label_propagation_pair_converges(self, spark):
+    def test_label_propagation_pair_converges(self, spark, lane):
         """The classic sync-LPA oscillation case (one edge): the self-label
         damping + smaller-label tie-break must converge, not swap forever."""
         from arkhammirror_spark.operators.graph import (

@@ -11,7 +11,7 @@ from arkhammirror_spark.plans import (
     read_schema,
     unpartitioned_windows,
 )
-from arkhammirror_spark.queries import QUERIES
+from arkhammirror_spark.contract import QUERIES
 
 SF = "/root/testdata/sf0.001"
 

@@ -5,7 +5,7 @@ CORRECTNESS check at sf=0.001 for speed.
 
 The contract (arkhammirror_spark/contract.py) is the consolidated 50-entry
 registry the driver actually sees; merged entries evaluate every part-level
-query of queries.QUERIES inside them, so this suite covers the full part
+query of contract.QUERIES inside them, so this suite covers the full part
 registry through the exact surface the driver checks."""
 
 import math
